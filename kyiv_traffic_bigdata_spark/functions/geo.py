@@ -49,6 +49,10 @@ def in_bbox(lat: Column, lon: Column, bbox: BoundingBox) -> Column:
 
     Expressed as four comparisons so Catalyst pushes it into the scan
     (PushedFilters on parquet; partition pruning if lat/lon bucketed).
+    Apply it to a parsed column (a scan column, or one a Generate or
+    lambda produced), never to a re-derivable parse expression: a filter
+    pushed below the projection that parses inlines one copy of the
+    parse per comparison.
     """
     return (
         lat.between(bbox.lat_min, bbox.lat_max)

@@ -16,10 +16,11 @@ rows that the F3 parse-success filter drops — the reference's
 "bad input is dropped, never fatal" contract (SURVEY §5).
 
 Scale: readers are plain ``spark.read.json`` scans with explicit schemas
-(no inference pass over 100 TB); the parse pipeline is one projection +
-filter — fully codegen'd, shuffle-free. The canonical store written by
-:func:`write_positions` is date-partitioned parquet bucketed by
-``vehicle_id`` so the W1 trajectory window can run shuffle-free.
+(no inference pass over 100 TB); the parse pipeline is one explode + one
+filter, each parser running once per line or payload element, no
+shuffle. The canonical store written by :func:`write_positions` is
+date-partitioned parquet bucketed by ``vehicle_id`` so the W1
+trajectory window can run shuffle-free.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..config import (
     KYIV_BBOX_POLLER,
+    POSITION_CSV_FIELDS,
     POSITION_EVENT_NAMES,
     BoundingBox,
 )
@@ -131,21 +133,27 @@ def read_routes(
 # P1–P5 — message parse pipeline (column expressions)
 # ---------------------------------------------------------------------------
 
-def parse_csv_position(value: Column) -> Column:
-    """P1 (parsers.py:24-53): 7-field CSV line → position struct, null if
-    wrong arity or any cast fails (reference drops on first bad cast)."""
-    parsed = F.from_csv(value, POSITION_DDL)
-    ok = (
-        (F.size(F.split(value, ",", -1)) == 7)
-        & parsed["vehicle_id"].isNotNull()
+def is_csv_position(text: Column, parsed: Column) -> Column:
+    """P1 (parsers.py:24-53): true when ``parsed``, the
+    ``from_csv(text, POSITION_DDL)`` of a line, is a position: exactly 7
+    fields, every cast non-null (the reference drops on the first bad
+    cast).
+
+    ``parsed`` must be read through a lambda variable (see
+    :func:`parse_messages`): applied to the ``from_csv`` expression
+    itself, each field access below would become its own single-field
+    parse. The arity split runs last, only for lines whose seven fields
+    all cast."""
+    return (
+        parsed["vehicle_id"].isNotNull()
         & parsed["route_id"].isNotNull()
         & parsed["lat"].isNotNull()
         & parsed["lon"].isNotNull()
         & parsed["direction"].isNotNull()
         & parsed["flag"].isNotNull()
         & parsed["timestamp"].isNotNull()
+        & (F.size(F.split(text, ",", -1)) == POSITION_CSV_FIELDS)
     )
-    return F.when(ok, parsed)
 
 
 def coerce_position_dict(d: Column) -> Column:
@@ -184,14 +192,27 @@ def parse_messages(
        CSV string or a position dict (P4);
     3. else drop (F3).
 
-    The bbox filter (F1) applies inside the same projection, mirroring the
-    reference's parse-time pushdown (parsers.py:40-41,100). One
-    explode + one filter — no shuffle, fully codegen'd except from_csv.
+    Each parser runs once per line and once per payload element. Every
+    line becomes an array of element texts: the line itself, or its
+    event's payload elements. Three ``transform`` lambdas inside the
+    explode's input then parse each element (``from_csv``, then
+    ``from_json`` only where the CSV check fails) and coerce it to the
+    position struct. Catalyst neither splits a parse whose fields are
+    read through a lambda variable into per-field parses nor copies a
+    lambda into a pushed-down filter, so the one Filter above the explode
+    (null drop + F1 bbox, the reference's parse-time pushdown,
+    parsers.py:40-41,100) reads only the exploded column. The parses run
+    interpreted; the regex, filter and projection are codegen'd. No
+    shuffle.
     """
     v = F.col(value_col)
+    # P5 without a line-level CSV parse: a line starting "42[" can never
+    # be a CSV position (its first field does not cast to LONG), and any
+    # other line can never be an event frame (SOCKETIO_FRAME_RE anchors
+    # on that prefix). So the prefix alone picks the branch.
+    is_frame = v.startswith("42[")
     event = F.regexp_extract(v, SOCKETIO_FRAME_RE, 1)
     payload = F.regexp_extract(v, SOCKETIO_FRAME_RE, 2)
-    is_event = event.isin(*event_names)
 
     # P3: payload forms — array of CSV strings, array of dicts, a bare JSON
     # string, or a single dict. One normalization covers all four:
@@ -201,37 +222,53 @@ def parse_messages(
     # reference's per-element dispatch (parsers.py:74-104). Scalars are
     # wrapped in [] because from_json has no scalar-string schema.
     wrapped = F.concat(F.lit("["), payload, F.lit("]"))
-    elements = F.coalesce(
-        F.from_json(payload, "array<string>"),
-        F.from_json(wrapped, "array<string>"),
+    texts = F.when(~is_frame, F.array(v)).when(
+        event.isin(*event_names),
+        F.coalesce(
+            F.from_json(payload, "array<string>"),
+            F.from_json(wrapped, "array<string>"),
+        ),
     )
-    event_elements = F.when(is_event, elements)
 
-    csv_direct = parse_csv_position(v)
-    # P5 dispatch: CSV-first short-circuit, else event payload elements.
-    unified = F.when(csv_direct.isNotNull(), F.array(v)).otherwise(event_elements)
+    # One from_csv per element; a "{"-prefixed element (a dict) can never
+    # cast its first field to LONG, so it skips the CSV parse.
+    with_csv = F.transform(
+        texts,
+        lambda t: F.struct(
+            t.alias("text"),
+            F.when(~t.startswith("{"), F.from_csv(t, POSITION_DDL)).alias("csv"),
+        ),
+    )
+    # CSV first; else one from_json, for event payload elements only (a
+    # bare line that is not CSV is dropped, never read as a dict).
+    no_csv = F.lit(None).cast(f"struct<{POSITION_DDL}>")
+    no_dict = F.lit(None).cast(f"struct<{POSITION_DICT_DDL}>")
+    with_dict = F.transform(
+        with_csv,
+        lambda e: F.when(
+            is_csv_position(e["text"], e["csv"]),
+            F.struct(e["csv"].alias("csv"), no_dict.alias("dict")),
+        ).when(
+            is_frame,
+            F.struct(
+                no_csv.alias("csv"),
+                F.from_json(e["text"], f"struct<{POSITION_DICT_DDL}>").alias("dict"),
+            ),
+        ),
+    )
+    positions = F.transform(
+        with_dict, lambda e: F.coalesce(e["csv"], coerce_position_dict(e["dict"]))
+    )
 
-    exploded = raw.select(
-        *[c for c in raw.columns if c != value_col],
-        F.explode(unified).alias("elem"),
-    )
-    elem = F.col("elem")
-    from_csv_elem = parse_csv_position(elem)
-    from_dict_elem = coerce_position_dict(
-        F.from_json(elem, f"struct<{POSITION_DICT_DDL}>")
-    )
-    pos = F.coalesce(from_csv_elem, from_dict_elem)
-
-    out = (
-        exploded.select(
-            *[c for c in exploded.columns if c != "elem"], pos.alias("p")
-        )
-        .where(F.col("p").isNotNull())
-        .select(*[c for c in exploded.columns if c != "elem"], "p.*")
-    )
+    keep = [c for c in raw.columns if c != value_col]
+    p = F.col("p")
     ts_default = default_ts if default_ts is not None else F.unix_timestamp()
-    out = out.withColumn("timestamp", F.coalesce(F.col("timestamp"), ts_default.cast("long")))
-    return out.where(in_bbox(F.col("lat"), F.col("lon"), bbox))
+    return (
+        raw.select(*keep, F.explode(positions).alias("p"))
+        .where(p.isNotNull() & in_bbox(p["lat"], p["lon"], bbox))
+        .select(*keep, "p.*")
+        .withColumn("timestamp", F.coalesce(F.col("timestamp"), ts_default.cast("long")))
+    )
 
 
 # ---------------------------------------------------------------------------

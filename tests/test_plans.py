@@ -1431,3 +1431,41 @@ def test_pca_invariants_returned_plan_single_scan_no_joins(plans):
     assert sort_merge_join_count(plan) == 0
     assert broadcast_join_count(plan) == 0
     assert "partial" in plan  # map-side combine on the per-dim agg
+
+
+def _scala_list(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _plan_nodes(node):
+    yield node
+    for kid in _scala_list(node.children()):
+        yield from _plan_nodes(kid)
+
+
+def test_kpt_parse_runs_each_parser_once(spark, tmp_path):
+    """P1-P5 (sources/kpt.py:parse_messages): one element-level from_csv
+    and one element-level struct from_json in the whole optimized plan.
+    Catalyst splits a from_csv/from_json whose fields are read directly
+    into one single-field parse per field, and pushes a filter on a
+    projected parse down as a copy of the parse; either would run the
+    parsers per field and per predicate again. So the Filter above the
+    Generate (null drop + bbox) must read only the generated column."""
+    from kyiv_traffic_bigdata_spark.sources.kpt import parse_messages
+
+    src = tmp_path / "frames.txt"
+    src.write_text('42["v",["1,2,50.45,30.52,0,0,1770000000"]]\n')
+    df = parse_messages(spark.read.text(str(src)), default_ts=F.lit(0))
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    text = optimized.toString()
+    assert text.count("from_csv(") == 1
+    assert text.count("from_json(StructField(") == 1
+
+    (flt,) = [n for n in _plan_nodes(optimized) if n.nodeName() == "Filter"]
+    generate = flt.child()
+    assert generate.nodeName() == "Generate"
+    cond = flt.condition()
+    refs = {a.toString() for a in _scala_list(cond.references().toSeq())}
+    generated = {a.toString() for a in _scala_list(generate.generatorOutput())}
+    assert refs == generated, (refs, generated)
+    assert "from_csv" not in cond.toString() and "from_json" not in cond.toString()

@@ -10,12 +10,15 @@ batch of generated examples instead of one job per example.
 from __future__ import annotations
 
 import base64
+import json
+import re
+from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from kyiv_traffic_bigdata_spark.config import KYIV_BBOX_POLLER
+from kyiv_traffic_bigdata_spark.config import KYIV_BBOX_POLLER, POSITION_EVENT_NAMES
 from kyiv_traffic_bigdata_spark.operators.dedup import exact_duplicates
 from kyiv_traffic_bigdata_spark.operators.latest import dedup_exact
 from kyiv_traffic_bigdata_spark.sources.eway import decode_messages
@@ -450,3 +453,149 @@ def test_cms_never_undercounts_and_is_exact_without_collisions(spark, keys):
     assert all(tight[str(k)] >= c for k, c in truth.items()), (tight, truth)
     roomy = estimates(depth=2, width=1 << 20)
     assert all(roomy[str(k)] == c for k, c in truth.items()), (roomy, truth)
+
+
+# -- P1-P5 differential: parse_messages vs a Python twin of the dispatch ----
+
+_EVENTS = ("locations", "vehicles", "positions", "v", "chat", "stats")
+
+
+def _twin_csv(text):
+    """P1 (parsers.py:24-53): 7 fields, int/float casts, None on any
+    failure (int() rejects float text such as a "297.4" flag)."""
+    f = text.split(",")
+    if len(f) != 7:
+        return None
+    try:
+        return (int(f[0]), int(f[1]), float(f[2]), float(f[3]),
+                int(f[4]), int(f[5]), int(f[6]))
+    except ValueError:
+        return None
+
+
+def _twin_dict(d, default_ts):
+    """P4 (models.py:30-39): id/routeId aliases, direction/flag default 0,
+    timestamp default now; a missing id or route id drops the element."""
+    vid = d.get("vehicle_id", d.get("id"))
+    rid = d.get("route_id", d.get("routeId"))
+    if vid is None or rid is None:
+        return None
+    return (vid, rid, d.get("lat"), d.get("lon"), d.get("direction", 0),
+            d.get("flag", 0), d.get("timestamp", default_ts))
+
+
+def _twin_parse(line, default_ts):
+    """P5 (parsers.py:115-134): CSV first, else an allowlisted Socket.IO
+    event whose payload is one element or a list of them (CSV string or
+    dict), else nothing; F1 keeps only in-bbox positions."""
+    pos = _twin_csv(line)
+    if pos is not None:
+        out = [pos]
+    else:
+        m = re.match(r'^42\["(\w+)",(.*)\]\s*$', line)
+        if m is None or m.group(1) not in POSITION_EVENT_NAMES:
+            return []
+        try:
+            payload = json.loads(m.group(2))
+        except ValueError:
+            return []
+        out = []
+        for item in payload if isinstance(payload, list) else [payload]:
+            if isinstance(item, str):
+                out.append(_twin_csv(item))
+            elif isinstance(item, dict):
+                out.append(_twin_dict(item, default_ts))
+    return [p for p in out if p is not None and KYIV_BBOX_POLLER.contains(p[2], p[3])]
+
+
+_coord = st.tuples(
+    st.sampled_from([50.2, 50.45, 50.50963, 50.7, 50.71, 49.0]),
+    st.sampled_from([30.2, 30.52, 30.64338, 31.0, 31.01]),
+)
+_position = st.tuples(
+    st.integers(1, 10**8), st.integers(1, 10**8), _coord,
+    st.integers(0, 1), st.integers(0, 3), st.integers(1_769_000_000, 1_771_000_000),
+)
+
+
+@st.composite
+def _csv_text(draw):
+    vid, rid, (lat, lon), d, fl, ts = draw(_position)
+    fields = [str(vid), str(rid), str(lat), str(lon), str(d), str(fl), str(ts)]
+    bad = draw(st.sampled_from(["", "", "", "float_flag", "arity", "alpha"]))
+    if bad == "float_flag":  # real wire line: flag "297.4" (kpt_poller.log)
+        fields[5] = "297.4"
+    elif bad == "arity":  # 8 fields all cast: only the arity check drops it
+        n = draw(st.sampled_from([1, 3, 6, 8]))
+        fields = fields[:n] if n < 7 else fields + ["0"]
+    elif bad == "alpha":
+        fields[draw(st.integers(0, 6))] = "x"
+    return ",".join(fields)
+
+
+@st.composite
+def _position_dict(draw):
+    """Alias or canonical keys; optional direction/flag/timestamp, so a
+    full dict has the 7 keys whose JSON text splits into 7 comma fields."""
+    vid, rid, (lat, lon), d, fl, ts = draw(_position)
+    alias = draw(st.booleans())
+    out = {("id" if alias else "vehicle_id"): vid,
+           ("routeId" if alias else "route_id"): rid, "lat": lat, "lon": lon}
+    if draw(st.booleans()):
+        out.update(direction=d, flag=fl, timestamp=ts)
+    elif draw(st.booleans()):
+        out["timestamp"] = ts
+    if draw(st.integers(0, 9)) == 0:  # no id at all: dropped
+        out.pop("id" if alias else "vehicle_id")
+    return out
+
+
+@st.composite
+def _frame_line(draw):
+    kind = draw(st.sampled_from(
+        ["csv", "csv_list", "dict_list", "one_csv", "one_dict",
+         "dict_line", "near_csv", "protocol", "truncated"]))
+    event = draw(st.sampled_from(_EVENTS))
+    if kind == "csv":
+        return draw(_csv_text())
+    if kind == "csv_list":
+        items = draw(st.lists(_csv_text(), min_size=1, max_size=4))
+        return f'42["{event}",{json.dumps(items)}]'
+    if kind == "dict_list":
+        items = draw(st.lists(_position_dict(), min_size=1, max_size=4))
+        return f'42["{event}",{json.dumps(items, separators=(",", ":"))}]'
+    if kind == "one_csv":
+        return f'42["{event}",{json.dumps(draw(_csv_text()))}]'
+    if kind == "one_dict":
+        return f'42["{event}",{json.dumps(draw(_position_dict()))}]'
+    if kind == "dict_line":  # a dict outside any frame is not a position
+        return json.dumps(draw(_position_dict()), separators=(",", ":"))
+    if kind == "near_csv":  # 7 comma fields behind the frame prefix
+        return "42[" + draw(_csv_text())
+    if kind == "protocol":
+        return draw(st.sampled_from(["2", "3", "40", "3probe", '42["chat",["hi"]]']))
+    return f'42["{event}",[' + draw(_csv_text())
+
+
+@given(st.lists(_frame_line(), min_size=1, max_size=40))
+@example([  # the shapes a cheaper dispatch could get wrong, every run
+    "1,2,50.45,30.52,0,0,1770000000,0",  # 8 fields, all cast
+    '42["v",["1,2,50.45,30.52,0,0,1770000000,"]]',
+    '{"vehicle_id":5,"route_id":6,"lat":50.45,"lon":30.52}',  # dict, no frame
+    '42["v",{"id":1,"routeId":2,"lat":50.45,"lon":30.52,"direction":1,"flag":2,"timestamp":3}]',
+    '42[1,2,50.45,30.52,0,0,1770000000',  # 7 fields behind the frame prefix
+    '42["v","3,4,50.45,30.52,0,0,1770000000"]',
+])
+@SETTINGS
+def test_kpt_parse_matches_python_twin_of_reference_dispatch(spark, lines):
+    """parse_messages row-for-row against a pure-Python twin of the
+    reference dispatch, over mixes of the FIXTURES.md §3 frame shapes."""
+    default_ts = 1_770_000_000
+    raw = spark.createDataFrame(list(enumerate(lines)), "i long, value string")
+    got = Counter(
+        tuple(r) for r in parse_messages(raw, default_ts=F.lit(default_ts)).collect()
+    )
+    want = Counter(
+        (i, *p) for i, line in enumerate(lines) for p in _twin_parse(line, default_ts)
+    )
+    assert got == want

@@ -145,3 +145,55 @@ def test_checkpoint_recovery_no_duplicates(spark, tmp_path):
     got = spark.read.json(out)
     assert got.count() == 2
     assert {r.vehicle_id for r in got.collect()} == {1, 2}
+
+
+@pytest.mark.parametrize("prefer_rocksdb", [True, False], ids=["rocksdb", "hdfs"])
+def test_checkpoint_recovery_keeps_dedup_state(spark, tmp_path, monkeypatch, prefer_rocksdb):
+    """Kill/restart with ST3 TTL dedup on: the restarted query must load
+    the dedup state its first run committed, so a duplicate whose copies
+    straddle the restart reaches the sink once. On RocksDB the state is
+    committed as changelogs and recovered by replaying them."""
+    from kyiv_traffic_bigdata_spark.streaming import state
+
+    if prefer_rocksdb and not state.rocksdb_available(spark):
+        pytest.skip("rocksdbjni absent in this JVM; fallback path covered")
+    confs = {k: spark.conf.get(k, None) for k in (state._PROVIDER_CONF, state.CHANGELOG_CONF)}
+    real_configure, chosen = state.configure_state_store, []
+
+    def configure(session, **_):  # the sink's call, pinned to this case's provider
+        chosen.append(real_configure(session, prefer_rocksdb=prefer_rocksdb))
+        return chosen[-1]
+
+    monkeypatch.setattr(state, "configure_state_store", configure)
+    src = tmp_path / "src"
+    src.mkdir()
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    dup = frame(1, 7, 1_770_000_000)
+
+    def run_once():
+        raw = replay_text_stream(spark, str(src))
+        q = start_positions_sink(ingest_transform(raw), out, ckpt, available_now=True)
+        q.awaitTermination(180)
+
+    try:
+        (src / "a.txt").write_text("\n".join([dup, frame(2, 7, 1_770_000_000)]) + "\n")
+        run_once()
+        (src / "b.txt").write_text("\n".join([dup, frame(3, 7, 1_770_000_001)]) + "\n")
+        run_once()  # restart: b.txt's copy of dup is dropped by recovered state
+
+        want = state.ROCKSDB_PROVIDER if prefer_rocksdb else state.HDFS_PROVIDER
+        assert chosen == [want, want]
+        changelog_on = spark.conf.get(state.CHANGELOG_CONF) == "true"
+        assert changelog_on == (want == state.ROCKSDB_PROVIDER)
+        state_files = [f for _, _, fs in os.walk(os.path.join(ckpt, "state")) for f in fs]
+        suffix = ".changelog" if prefer_rocksdb else ".delta"
+        assert any(f.endswith(suffix) for f in state_files), state_files
+
+        got = [r.vehicle_id for r in spark.read.json(out).collect()]
+        assert sorted(got) == [1, 2, 3]
+    finally:
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
