@@ -18,9 +18,12 @@ Layout
 ``sources``    Batch readers/writers (JSONL envelopes, GeoJSON, OSM,
                weather) and streaming sources (file replay, Socket.IO).
 ``streaming``  Structured Streaming ingest graphs (parse -> filter -> dedup
-               -> partitioned sink with checkpoint recovery).
-``plans``      End-to-end analytics pipelines (the reference's
-               ``kpt/visualize.py`` workload, Spark-first).
+               -> partitioned sink with checkpoint recovery) and the
+               ``applyInPandasWithState`` stateful operators.
+``kpt_pipeline``
+               The reference's ``kpt/visualize.py`` workload as one
+               DataFrame chain, Spark-first.
+``plans``      Physical-plan inspection helpers for plan-shape tests.
 """
 
 __version__ = "0.1.0"

@@ -11147,19 +11147,19 @@ def q_event_welch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_n1") > 1,
             (F.col("_q1") - n1d * (F.col("_s1") / n1d) * (F.col("_s1") / n1d))
             / (n1d - 1.0),
-        ).alias("_v1"),
+        ).alias("_var1"),
         F.when(
             F.col("_n2") > 1,
             (F.col("_q2") - n2d * (F.col("_s2") / n2d) * (F.col("_s2") / n2d))
             / (n2d - 1.0),
-        ).alias("_v2"),
+        ).alias("_var2"),
     )
-    vn1 = F.col("_v1") / F.col("n_first").cast("double")
-    vn2 = F.col("_v2") / F.col("n_second").cast("double")
+    vn1 = F.col("_var1") / F.col("n_first").cast("double")
+    vn2 = F.col("_var2") / F.col("n_second").cast("double")
     pooled = vn1 + vn2
     ok = (
-        F.col("_v1").isNotNull()
-        & F.col("_v2").isNotNull()
+        F.col("_var1").isNotNull()
+        & F.col("_var2").isNotNull()
         & (pooled > 0)
     )
     t = (F.col("_m1") - F.col("_m2")) / F.sqrt(pooled)

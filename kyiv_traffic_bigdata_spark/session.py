@@ -12,7 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: local[N] cores, also the default shuffle-partition count.
+LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(
@@ -31,20 +32,12 @@ def get_spark(
       * UTC session time zone so timestamps compare bit-for-bit against
         UTC-naive engines (DuckDB oracle) and across clusters.
     """
-    # Activate the vendored protobuf mini-runtime BEFORE the JVM
-    # launches so TWS companion runners (which build PYTHONPATH from
-    # the JVM's env) inherit it; no-op when real protobuf is installed.
-    from .protoshim import ensure_protobuf
-
-    ensure_protobuf()
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{LOCAL_CPUS}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or LOCAL_CPUS),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -55,10 +48,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Scan-split sizing, env-tunable. The 128m default is right for
-        # row-group-sized cluster files (partitions must fit executor
-        # memory without multiplying scheduler overhead at 100 TB task
-        # counts). Shrinking it to parallelize the bench's tiny files was
+        # Scan-split sizing: 128m is right for row-group-sized cluster
+        # files (partitions must fit executor memory without multiplying
+        # scheduler overhead at 100 TB task counts). Shrinking it to parallelize the bench's tiny files was
         # measured NET-NEGATIVE here (4m: 101s vs 66s total at sf0.1 —
         # tiny-task overhead beats the extra cores); operators that grind
         # interpreted lambdas per row instead repartition explicitly
@@ -74,10 +66,7 @@ def get_spark(
         # scale (shuffling a petabyte fact ahead of a partial agg), so
         # it is deliberately not done; real deployments write multi-
         # row-group files and get scan parallelism for free.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "128m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -99,9 +99,7 @@ def read_positions_ordered(spark: SparkSession, paths: str | list[str]) -> DataF
     )
 
 
-def read_routes(
-    spark: SparkSession, paths: str | list[str], latest_only: bool = True
-) -> DataFrame:
+def read_routes(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """S2 (visualize.py:48-57): route catalog, last-write-wins per id.
 
     The reference builds a dict so later JSONL lines overwrite earlier
@@ -115,8 +113,6 @@ def read_routes(
         F.col("poll_number"),
         F.explode("routes").alias("r"),
     ).select("poll_ts", "poll_number", "r.id", "r.type", "r.number")
-    if not latest_only:
-        return exploded
     # max_by over a packed struct: single hash aggregate, no window shuffle.
     return (
         exploded.groupBy("id")

@@ -74,11 +74,10 @@ def start_positions_sink(
     positions: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    fmt: str = "json",
     trigger_seconds: int | None = FLUSH_INTERVAL_S,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """ST1/ST10/S3: micro-batch flush into a date-partitioned store.
+    """ST1/ST10/S3: micro-batch flush into a date-partitioned JSON store.
 
     The reference's midnight file rotation (writer.py:18-23) becomes a
     ``date`` partition column; its 5-s flush timer becomes the processing
@@ -96,7 +95,7 @@ def start_positions_sink(
         "date", F.date_format(F.col("ingest_ts"), "yyyyMMdd")
     )
     writer = (
-        out.writeStream.format(fmt)
+        out.writeStream.format("json")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)
         .partitionBy("date")

@@ -205,7 +205,7 @@ def test_upsert_parquet_last_write_wins(spark, tmp_path):
     from kyiv_traffic_bigdata_spark.operators.maintenance import upsert_parquet
 
     base = str(tmp_path / "dim")
-    out = str(tmp_path / "dim_v2")
+    out = str(tmp_path / "dim_next")
     spark.createDataFrame(
         [(1, "one", 0), (2, "two", 0), (3, "three", 0)],
         "id long, label string, ver long",
